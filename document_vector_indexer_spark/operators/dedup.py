@@ -41,27 +41,6 @@ def exact_dedup_keep_first(
     )
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-grams of a text column (array<string>).
-
-    WARNING (perf): fine for unit-scale use, but the element_at calls
-    inside the transform lambda re-evaluate the tokenizer per element
-    (Catalyst CSE stops at lambda boundaries) — O(n_words^2) per doc.
-    For bulk shingling, materialize the words array behind an Exchange
-    first, as ``ngram_jaccard_pairs`` does."""
-    words = TX.word_tokens(text)
-    grams = F.when(
-        F.size(words) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - n),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(words, (i + j + 1).cast("int")) for j in range(n)]
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.array_distinct(grams)
-
-
 def shingle_projection(
     df: DataFrame,
     block_cols: tuple[str, ...] = ("source",),
@@ -444,12 +423,18 @@ MINHASH_PRIME = _CHAR_MOD  # M31; char-fold hashes already live in [0, M31)
 
 def _minhash_coeffs(k: int) -> list[tuple[int, int]]:
     """Deterministic affine-permutation coefficients, derivable from the
-    index alone: a_i = (2i+1)*104729 mod M31 (odd, nonzero), b_i =
-    7919*i + 13 mod M31. Pure-integer formulas any engine reproduces —
-    the DuckDB oracle computes the SAME coefficients from
-    generate_series, so signatures are bit-identical across engines."""
+    index alone: a_i = 48271^(i+1) mod M31 (the MINSTD stream that
+    trainprep.portable_hash_fraction also uses), b_i = 7919*i + 13
+    mod M31. Pure-integer formulas any engine reproduces — the DuckDB
+    oracle computes the SAME coefficients from generate_series, so
+    signatures are bit-identical across engines.
+
+    The multipliers must be decorrelated: small odd multiples of one
+    constant (a_i = (2i+1)*c) make every component tend to pick the
+    same minimal shingle, so distinct docs sharing one stopword bigram
+    would collide in every band."""
     return [
-        ((2 * i + 1) * 104729 % MINHASH_PRIME, (7919 * i + 13) % MINHASH_PRIME)
+        (pow(48271, i + 1, MINHASH_PRIME), (7919 * i + 13) % MINHASH_PRIME)
         for i in range(k)
     ]
 
@@ -481,7 +466,7 @@ def minhash_signature_df(
     r12: the shingle hashes ride the same vectorized prefix-hash
     kernel as dup_substring_stats (``_gram_hashes_arrow`` with k=n —
     an n-word shingle IS a stride-1 n-gram; exact modular equality
-    with the expr fold, covered by the kernel's parity test at k=2).
+    with the char fold, covered by the pure-Python oracle at k=2).
 
     Returns (id, sig: array<long> of length k).
     """
@@ -777,14 +762,13 @@ def lsh_hyperplanes(dim: int, bands: int, bits: int, seed: int = 7):
 def _lsh_pack_codes(X, S, bands: int, bits: int):
     """Vectorized sign-LSH codes for a (n, dim) float64 batch against
     the (bands*bits, dim) ±1 sign matrix ``S`` — BIT-IDENTICAL to the
-    interpreted expression fold and to the DuckDB oracle's add/subtract
-    chains, by construction:
+    DuckDB oracle's add/subtract chains, by construction:
 
     the accumulation runs as ``dim`` vectorized steps IN ARRAY-INDEX
     ORDER (``acc += X[:, i] * S[:, i]``), so every (row, plane) cell
     sees exactly the left-to-right sequence ``((0.0 ± x_0) ± x_1) ...``
-    of IEEE double additions that ``F.aggregate``'s fold and the
-    oracle's literal ``0.0 + e[1] - e[2] ...`` chain perform — the
+    of IEEE double additions that the oracle's literal
+    ``0.0 + e[1] - e[2] ...`` chain performs — the
     multiply by ±1.0 is exact (a sign flip), each ``+=`` is one IEEE
     add per cell, and numpy does not fuse or reorder separate ufunc
     calls. A single BLAS matmul would be ~dim/4x fewer instructions but
@@ -804,9 +788,8 @@ def _lsh_pack_codes(X, S, bands: int, bits: int):
     # NaN semantics must mirror the JVM comparison, not IEEE: Spark
     # (and the DuckDB oracle, Postgres-style) order NaN GREATER than
     # every value, so a NaN projection sets the bit; numpy's NaN > 0
-    # is False, which silently flipped every bit of a NaN-poisoned row
-    # (r11 review catch — a vector with one NaN component lands in
-    # bucket 2^bits-1 of every band on the expr path, bucket 0 here).
+    # is False, so the isnan term is what puts a vector with one NaN
+    # component in bucket 2^bits-1 of every band.
     hit = (acc > 0.0) | np.isnan(acc)
     weights = 1 << np.arange(bits, dtype=np.int64)
     return (hit.reshape(n, bands, bits) * weights).sum(axis=2).astype(np.int32)
@@ -820,7 +803,6 @@ def embedding_lsh_blocks(
     bands: int = 6,
     bits: int = 4,
     seed: int = 7,
-    impl: str = "arrow",
     carry_vec: bool = True,
 ) -> DataFrame:
     """Sign-LSH banding of an embedding column: one output row per
@@ -834,67 +816,33 @@ def embedding_lsh_blocks(
     the test corpus, web scale wants 16-20. ``bands`` trades recall for
     candidate volume (union over bands).
 
-    ``impl`` (r11): ``"arrow"`` (default) computes all bands*bits
-    projections per row in ONE vectorized numpy pass inside
-    ``mapInPandas`` — the constant-factor lever the r10 second-decade
-    sweep named (the per-bit interpreted HOF folds were bits·bands·dim
-    work per row with bits ~ log n; measured 147–187 s per key at
-    ~sf10). Bit-identical to the expression path by the index-order
-    accumulation argument in ``_lsh_pack_codes`` (verified by the
-    pinned ``q_lsh_buckets`` DuckDB oracle and an expr-vs-arrow parity
-    test on the real fixtures). ``"expr"`` keeps the pure-JVM
-    column-expression path (no Python boundary; the parity reference).
+    All bands*bits projections per row run in ONE vectorized numpy
+    pass inside ``mapInPandas`` (``_lsh_pack_codes``). The index-order
+    accumulation keeps every projection bit-identical to the DuckDB
+    oracle's add/subtract chain (pinned by ``q_lsh_buckets``).
     ``carry_vec=False`` drops the vector from the output (callers that
     only need (id, band, bucket) — e.g. semantic dedup — then shuffle
     narrow rows).
     """
     from pyspark.sql import types as T
 
-    # Explicit range check (r11 ADVICE): the arrow kernel's int32 pack
-    # would silently WRAP at bits >= 32 while the expr path's ANSI int
-    # cast raises — a divergence only explicit callers can reach
-    # (``recommended_lsh_bits`` caps at 24), so fail both paths loudly.
+    # The kernel packs each band into an int32, which would silently
+    # WRAP at bits >= 32; only explicit callers can get there
+    # (``recommended_lsh_bits`` caps at 24), so reject them loudly.
     if isinstance(bits, bool) or not isinstance(bits, int) or not 1 <= bits <= 31:
         raise ValueError(f"bits must be an int in [1, 31], got {bits!r}")
     if isinstance(bands, bool) or not isinstance(bands, int) or bands < 1:
         raise ValueError(f"bands must be a positive int, got {bands!r}")
 
     H = lsh_hyperplanes(dim, bands, bits, seed)
-    if impl == "expr":
-        band_structs = []
-        for b in range(bands):
-            bucket: Column | None = None
-            for j in range(bits):
-                plane = F.array(*[F.lit(float(v)) for v in H[b][j]])
-                bit = F.when(
-                    V.dot(F.col(vec_col), plane) > 0, F.lit(1 << j)
-                ).otherwise(F.lit(0))
-                bucket = bit if bucket is None else bucket + bit
-            band_structs.append(
-                F.struct(F.lit(b).alias("band"), bucket.cast("int").alias("bucket"))
-            )
-        out = df.select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.explode(F.array(*band_structs)).alias("bb"),
-        ).select(
-            id_col,
-            vec_col,
-            F.col("bb.band").alias("band"),
-            F.col("bb.bucket").alias("bucket"),
-        )
-        return out if carry_vec else out.drop(vec_col)
-    if impl != "arrow":
-        raise ValueError(f"impl must be 'arrow' or 'expr', got {impl!r}")
-
     base = df.select(F.col(id_col), F.col(vec_col))
     # Element-level NULLs (a null FLOAT inside a non-null vector) are
     # indistinguishable from real NaN after the Arrow->pandas hop, but
-    # the two diverge on the expr path: a NULL element NULL-propagates
-    # through the fold -> no bit set -> bucket 0, while a real NaN
-    # projection compares GREATER than 0 JVM-side -> every bit set.
-    # Flag them JVM-side before the boundary (r11 ADVICE parity gap);
-    # skipped entirely when the schema proves no element nulls exist.
+    # the rules differ: a NULL element makes the projection NULL -> no
+    # bit set -> bucket 0 (SQL NULL propagation, as in the oracle),
+    # while a real NaN projection compares GREATER than 0 -> every bit
+    # set. Flag them JVM-side before the boundary; skipped entirely
+    # when the schema proves no element nulls exist.
     vec_type = base.schema[vec_col].dataType
     flag_nulls = bool(getattr(vec_type, "containsNull", False))
     if flag_nulls:
@@ -936,11 +884,10 @@ def embedding_lsh_blocks(
                     X.astype(np.float64, copy=False), S, bands, bits
                 )
                 if nullelem.any():
-                    codes[nullelem] = 0  # expr parity: NULL element -> bucket 0
+                    codes[nullelem] = 0  # NULL element -> bucket 0
             else:
-                # Ragged/null rows: the expression path's fold over a
-                # zip_with length mismatch yields NULL -> no bit set ->
-                # bucket 0 in every band; mirror that exactly.
+                # Ragged/null rows have no defined projection (NULL)
+                # -> no bit set -> bucket 0 in every band.
                 codes = np.zeros((n, bands), dtype=np.int32)
                 ok = np.fromiter(
                     (v is not None and len(v) == dim for v in vals),
@@ -1497,7 +1444,7 @@ def _gram_hash_arrays(words_col, k: int, mod: int = _CHAR_MOD) -> list:
     for row, w in enumerate(words_col):
         m = 0 if w is None else len(w)
         if m < k:
-            # mirror the expr path's otherwise-empty-array
+            # fewer than k words: no grams
             out_hashes.append(np.empty(0, np.int64))
             continue
         lens = np.fromiter((len(x) for x in w), dtype=np.int64, count=m)
@@ -1523,7 +1470,7 @@ def _gram_hashes_arrow(
     evaluation — the measured q_dedup_substrings wall at every scale.
 
     Input must carry (id_col, _words array<string>). Returns
-    (id_col, _gh long) exploded rows, same as the expr path.
+    (id_col, _gh long) exploded rows.
     """
     from pyspark.sql import types as T
 
@@ -1550,7 +1497,6 @@ def dup_substring_stats(
     k: int = 8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Passage-level duplicated-substring detection (the exact-substring
     dedup signal of Lee et al., "Deduplicating Training Data Makes
@@ -1574,44 +1520,17 @@ def dup_substring_stats(
     the portable char-fold (pure integer arithmetic), so a SQL oracle
     reproduces it value-for-value.
 
-    ``impl`` (r12): ``"arrow"`` (default) computes every gram hash in
-    one vectorized prefix-hash pass per Arrow batch
-    (``_gram_hashes_arrow`` — exact modular-arithmetic equality with
-    the fold, pinned by an expr-vs-arrow parity test on real fixtures
-    plus unicode/edge rows); ``"expr"`` keeps the pure-JVM explode +
-    interpreted char fold as the parity reference. The hash is the
-    operator's measured wall (char-fold CPU ∝ corpus chars × k —
-    468 s at ~sf100 on the expr path), which is exactly the r11
-    LSH-kernel situation transplanted to integers.
+    Every gram hash comes from one vectorized prefix-hash pass per
+    Arrow batch (``_gram_hashes_arrow``), exactly equal to the char
+    fold of the gram string: the hash is the operator's measured wall
+    (char-fold CPU ∝ corpus chars × k).
     """
     from document_vector_indexer_spark.functions import text as TX
 
     words = df.select(
         F.col(id_col), TX.word_tokens(F.col(text_col)).alias("_words")
     )
-    if impl == "arrow":
-        exploded = _gram_hashes_arrow(words, k, id_col)
-    elif impl == "expr":
-        n = F.size("_words")
-        # Build gram STRINGS first and hash only after the explode
-        # materializes them as a plain column: inlining the
-        # concat_ws(slice) expression into _word_hash's per-character
-        # fold lambda re-evaluates the whole slice+concat once per
-        # character (the documented lambda-boundary trap, see the
-        # module notes above) — O(len²) CPU in this operator's hot
-        # kernel.
-        grams = F.when(
-            n >= k,
-            F.transform(
-                F.sequence(F.lit(1), n - (k - 1)),
-                lambda i: F.concat_ws(" ", F.slice(F.col("_words"), i, k)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        exploded = words.select(
-            F.col(id_col), F.explode(grams).alias("_gram")
-        ).select(F.col(id_col), _word_hash(F.col("_gram")).alias("_gh"))
-    else:
-        raise ValueError(f"impl must be 'arrow' or 'expr', got {impl!r}")
+    exploded = _gram_hashes_arrow(words, k, id_col)
     # "appears in >1 distinct doc" as min(id) != max(id) over a WINDOW
     # on the gram hash — values identical to countDistinct(id) > 1 for
     # non-null ids, but the plan is ONE exchange + one sort of the

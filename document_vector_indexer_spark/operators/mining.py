@@ -405,6 +405,8 @@ def _pair_stats_from_masks(vocab: DataFrame, mcnt: DataFrame) -> DataFrame:
             "n_baskets",
             F.max(F.when(F.col("ba") == -1, F.col("c"))).over(w_g),
         )
+        # must stay AFTER all three window columns: the marker rows it
+        # drops (ba/bb = -1/-2) are the windows' inputs
         .filter((F.col("ba") >= 0) & (F.col("bb") >= 0))
     )
     return stats.crossJoin(F.broadcast(vocab)).select(

@@ -149,58 +149,14 @@ def word_ngrams(words: Column, n: int) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def _exploded_grams(
-    df: DataFrame, text_col: str, id_col: str, n: int
-) -> DataFrame:
-    """(id, gram) rows — one per word ``n``-gram occurrence — built in
-    the EXPLODE-THEN-WINDOW shape: posexplode the token array, then
-    assemble each gram from ``n-1`` lag() values over the (id, pos)
-    window. The r5 finding that forced this shape: building gram
-    strings inside an array HOF runs INTERPRETED (ArrayAggregate/
-    ArrayTransform.eval — every concat/element_at a virtual call,
-    measured ~2 µs per gram, 8.6 of q_decontaminate's 9.2 s at sf0.1),
-    while window lags + concat run inside WindowExec/codegen at
-    per-row speed. The window needs NO exchange: rows arrive
-    hash-partitioned by id from the tokenizer barrier, and the window's
-    partition keys (id, _row) are a SUPERSET of that hash key, so the
-    existing distribution already clusters them (sort is
-    partition-local). ``_row`` is a synthesized per-row key: the window
-    must never merge two rows that happen to share ``id_col`` (round-5
-    ADVICE: duplicate ids interleaved tokens at equal positions and
-    produced silently wrong grams; per-row grams are what the n-gram
-    semantics mean). ``_row`` values are nondeterministic across
-    re-evaluations but only their per-row UNIQUENESS matters — the
-    emitted (id, gram) rows are identical for any assignment."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("_id", "_row").orderBy("_pos")
-    parts = [F.lag("_w", n - 1 - j).over(w) for j in range(n - 1)] + [F.col("_w")]
-    return (
-        df.withColumn("_row", F.monotonically_increasing_id())
-        .repartition(F.col(id_col))
-        .select(
-            F.col(id_col).alias("_id"),
-            F.col("_row"),
-            F.posexplode(TX.word_tokens(F.col(text_col))).alias("_pos", "_w"),
-        )
-        .select("_id", "_row", "_pos", F.concat_ws(" ", *parts).alias("gram"))
-        .filter(F.col("_pos") >= n - 1)  # incomplete leading windows
-        .select(F.col("_id").alias(id_col), "gram")
-    )
-
-
 def _gram_hash_rows(
     df: DataFrame, text_col: str, id_col: str, n: int
 ) -> DataFrame:
     """(id, _gh) rows — one per word ``n``-gram occurrence, as int64
     char-fold hashes from the vectorized prefix-hash kernel
     (dedup._gram_hashes_arrow). The kernel computes each gram's hash
-    per DOCUMENT ROW independently (duplicate ids are naturally
-    per-occurrence — the property _exploded_grams needed a synthetic
-    _row key for), so no window and no gram STRING ever materializes:
-    the r12 substrings finding applied here (r13) — per-gram string
-    assembly over the train split was q_decontaminate's measured sf100
-    wall (273.6 s, the largest absolute)."""
+    per DOCUMENT ROW independently (rows sharing an id never mix
+    tokens), and no gram STRING ever materializes."""
     from document_vector_indexer_spark.operators.dedup import (
         _gram_hashes_arrow,
     )
@@ -218,7 +174,6 @@ def contamination_hits(
     id_col: str = "doc_id",
     bench_text_col: str | None = None,
     n: int = 5,
-    impl: str = "hash",
     bench_broadcast: bool | None = None,
     bench_broadcast_max_bytes: int = 512 << 20,
 ) -> DataFrame:
@@ -231,36 +186,29 @@ def contamination_hits(
     Scale shape: the benchmark side is tiny compared to the corpus
     (thousands of eval rows vs billions of train docs), so its distinct
     n-gram set is BROADCAST and the probe is a map-side hash join — no
-    join shuffle of train data at all. As of r13 the default
-    representation is the int64 char-fold gram HASH on both sides
-    (``impl="hash"``, kernel-computed — the broadcast set is 8-byte
-    longs instead of gram strings, and no gram string is ever built):
-    gram identity becomes hash identity, the same declared semantics
-    trade as dup_substring_stats (M31 collisions can merge two distinct
-    grams; the SQL oracle applies the identical fold so results match
-    value-for-value). The r13 tail is SINGLE-PASS: the old
-    hits-join-counts plan referenced the gram frame twice, and with a
-    Python kernel in the subtree ReuseExchange can never merge the two
-    copies (two mapInPandas calls are not canonically equal), so the
-    corpus would be tokenized + hashed TWICE; instead ONE distinct on
-    (id, hash) — map-side partial aggregation dedups before the narrow
-    16-byte-row shuffle — feeds a broadcast LEFT probe of the bench
-    set, and one id-keyed aggregation counts total and hit grams
-    together. Two narrow exchanges, one pass over the corpus.
-    ``impl="string"`` keeps the r5 explode+window gram-string path as
-    the parity reference (value-identical wherever the fixture
-    vocabulary is collision-free; pinned by test).
+    join shuffle of train data at all.
 
-    BEHAVIOR CHANGE CALLOUT (r13, for callers upgrading from the
-    string default): under ``impl="hash"`` a flagged doc can be a hash
-    FALSE POSITIVE — a doc sharing no real n-gram with the benchmark
-    is flagged when one of its gram hashes collides with a bench gram
+    Gram identity is M31 char-fold identity: both sides carry each
+    gram as its int64 char-fold hash (kernel-computed, so no gram
+    string is ever built and the broadcast set is 8-byte longs), the
+    same declared trade as dup_substring_stats. The SQL oracle applies
+    the identical fold, so results match value-for-value. Two
+    consequences: a doc sharing no real n-gram with the benchmark is
+    flagged when one of its gram hashes collides with a bench gram
     hash, expected ~(doc_grams x bench_grams)/2^31 per doc (a
     constructed collision is test-pinned in tests/test_trainprep.py);
     and ``n_grams`` counts DISTINCT HASHES, which can undercount
-    distinct grams by in-doc collisions at the same rate. Callers that
-    need exact gram identity (e.g. auditing individual flagged docs
-    rather than bulk-dropping them) should pass ``impl="string"``.
+    distinct grams by in-doc collisions at the same rate.
+
+    The tail is SINGLE-PASS: a hits-join-counts plan would reference
+    the gram frame twice, and with a Python kernel in the subtree
+    ReuseExchange can never merge the two copies (two mapInPandas
+    calls are not canonically equal), so the corpus would be tokenized
+    + hashed TWICE. Instead ONE distinct on (id, hash) — map-side
+    partial aggregation dedups before the narrow 16-byte-row shuffle —
+    feeds a LEFT probe of the bench set, and one id-keyed aggregation
+    counts total and hit grams together. Two narrow exchanges, one
+    pass over the corpus.
 
     Broadcast-pin limit (r14, guard IMPLEMENTED r15): the forced
     ``F.broadcast(bench_keys)`` is correct for the operator's contract
@@ -284,42 +232,26 @@ def contamination_hits(
     deliberately reads the RAW bench frame, not the kernel output:
     Catalyst statistics cannot see through the MapInPandas gram
     kernel, while the scan-level estimate is file-size-grounded.
-    Callers that know better pass ``bench_broadcast=True/False``.
+    Callers that know better pass ``bench_broadcast=True/False``. A
+    stats-less bench frame (``createDataFrame``/RDD-backed, whose
+    estimate is Long.MaxValue) always takes the merge path, so such
+    callers should pass ``bench_broadcast=True``.
     Either regime returns identical values (join strategy, never
     semantics).
 
     Returns (``id_col``, n_contaminated, n_grams) for flagged docs only.
     """
-    if impl not in ("hash", "string"):
-        raise ValueError(f"impl must be 'hash' or 'string': {impl!r}")
     btext = bench_text_col or text_col
     # the bench side needs only a text column (an eval set often has no
-    # train-side id); synthesize a row id for the gram window if absent
+    # train-side id); synthesize a row id if absent
     bench = (
         bench_df
         if id_col in bench_df.columns
         else bench_df.withColumn(id_col, F.monotonically_increasing_id())
     )
-    if impl == "hash":
-        key = "_gh"
-        bench_keys = (
-            _gram_hash_rows(bench, btext, id_col, n).select(key).distinct()
-        )
-        dg = (
-            _gram_hash_rows(df, text_col, id_col, n)
-            .select(id_col, key)
-            .distinct()
-        )
-    else:
-        key = "gram"
-        bench_keys = (
-            _exploded_grams(bench, btext, id_col, n).select(key).distinct()
-        )
-        dg = (
-            _exploded_grams(df, text_col, id_col, n)
-            .select(id_col, key)
-            .distinct()
-        )
+    key = "_gh"
+    bench_keys = _gram_hash_rows(bench, btext, id_col, n).select(key).distinct()
+    dg = _gram_hash_rows(df, text_col, id_col, n).select(id_col, key).distinct()
     if bench_broadcast is None:
         est = int(
             str(

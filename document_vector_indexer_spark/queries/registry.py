@@ -97,124 +97,4 @@ def all_queries() -> dict[str, QuerySpec]:
         merged[alias] = QuerySpec(
             spec.fn, spec.oracle, f"SURVEY §2B alias of {target}"
         )
-    return _reverification_order(merged)
-
-
-# Re-verification policy (round-5 rework per VERDICT item 6; history:
-# round-3 changed-keys-first replaced the round-2 back-rotation that let
-# a rewritten q_win_ntile hide behind a stale green row): registry
-# iteration order is a *priority* order — the least proven keys come
-# first — so any bounded correctness budget (the driver checks a ~50-key
-# prefix per round; local CI may do the same) spends its checks where
-# they carry information:
-#
-#   1. _CHANGED_SINCE_VERIFIED: keys whose implementation or oracle text
-#      changed after their last green driver row. A stale green row is
-#      NOT evidence, so these always re-front. Maintained by hand each
-#      round: touch a query (or an operator/oracle it uses) -> add its
-#      key here; a fresh green row in CORRECTNESS_r*.json -> remove it.
-#   2. Everything else ordered by LAST-VERIFIED ROUND ascending (oldest
-#      driver row first; never-verified keys sort as round 0, i.e.
-#      first), registration order breaking ties.
-#
-# Rule 2 is what makes the rotation guarantee EXPLICIT: with N keys and
-# a budget of B per round, oldest-first means every key is re-checked
-# within ceil(N/B) rounds (162 keys / 50 per round -> every key within 4
-# rounds). The last-verified rounds are read from the driver's own
-# CORRECTNESS_r*.json files at the repo root — self-maintaining: the
-# next round's file automatically pushes this round's checked keys to
-# the back of the queue. tests/test_registry.py simulates the rotation
-# forward and asserts the staleness bound.
-
-# Changed in round 15: see rule 1 above. (The full round-14 list — the
-# bitmask basket family, the DECIMAL(38) widenings, the dedup-tail and
-# text-family exchange reworks — got green rows in CORRECTNESS_r14.json
-# and rotates by age now. Keys touched in round 15 are added below as
-# they change.)
-_CHANGED_SINCE_VERIFIED: list[str] = [
-    "q_basket_rules",       # r15 opt: supports/item-counts/n_baskets
-                            #     off ONE tagged explode + (ba, bb)
-                            #     agg + window maxes over the
-                            #     vocabulary-bounded aggregate — the
-                            #     r14 item-count and n_baskets
-                            #     broadcast-build jobs are gone (5
-                            #     jobs -> 3, 14 stages -> 10). Values
-                            #     identical (sets parity pinned);
-                            #     oracle untouched; sim green 3 sfs
-    "q_triangles",          # r15 opt: same collapse for the edge
-                            #     threshold's n_baskets (tagged total
-                            #     row + single-partition window, no
-                            #     broadcast-build job). Values
-                            #     identical; sim green 3 sfs
-    "q_decontaminate",      # r15: bench-broadcast size guard — past
-                            #     512 MB estimated bench input the
-                            #     probe becomes a MERGE-pinned join
-                            #     (q_tpch_q21 spill lesson). Declared
-                            #     query keeps the broadcast plan at
-                            #     every testdata sf (plan pin green);
-                            #     values identical either regime;
-                            #     sim green 3 sfs
-]
-
-
-def _last_verified_rounds() -> dict[str, int]:
-    """Key -> latest round with a usable driver row: a green oracle row
-    (hash_match) or, for rows-only-by-design keys, a clean run
-    (err == 'no_oracle' with a row count). Red/errored rows do NOT
-    count as verification — those keys keep their older round (or 0)
-    and stay near the front. Missing files (fresh clone) degrade to
-    everything-never-verified, i.e. plain registration order."""
-    import glob
-    import json
-    import os
-    import re
-
-    root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    last: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = re.search(r"_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for key, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            ok = bool(row.get("hash_match")) or (
-                row.get("err") == "no_oracle"
-                and row.get("spark_rows") is not None
-            )
-            if ok:
-                last[key] = max(last.get(key, 0), rnd)
-    return last
-
-
-def _priority_order(
-    keys: list[str], changed: list[str], last: dict[str, int]
-) -> list[str]:
-    """Pure ordering rule (unit-testable): changed keys first in their
-    declared order, then everything else oldest-verified-first with
-    registration order as the tiebreak."""
-    reg_pos = {k: i for i, k in enumerate(keys)}
-    front = [k for k in changed if k in reg_pos]
-    in_front = set(front)
-    rest = sorted(
-        (k for k in keys if k not in in_front),
-        key=lambda k: (last.get(k, 0), reg_pos[k]),
-    )
-    return front + rest
-
-
-def _reverification_order(merged: dict[str, QuerySpec]) -> dict[str, QuerySpec]:
-    """Priority order per the policy above. Pure reordering — the key
-    set and every spec are untouched."""
-    order = _priority_order(
-        list(merged), _CHANGED_SINCE_VERIFIED, _last_verified_rounds()
-    )
-    return {k: merged[k] for k in order}
+    return merged

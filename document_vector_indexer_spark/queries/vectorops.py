@@ -681,7 +681,8 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Mirrors minhash_portable_pairs exactly: same char-fold hash (see
 # SQL_DEDUP_SIMHASH), same a_i/b_i coefficient formulas derived from the
-# permutation index, same band keys, same bucket cap, same estimate.
+# permutation index (a_i = 48271^(i+1) mod M31 as a running product),
+# same band keys, same bucket cap, same estimate.
 SQL_DEDUP_MINHASH = """
 WITH w AS (
   SELECT doc_id AS id,
@@ -704,13 +705,19 @@ h AS (
                        (a, c) -> (a * 131 + c) % 2147483647)) AS hashes
   FROM sh
 ),
+coef AS (
+  SELECT list_transform(generate_series(0, 15), i ->
+           list_reduce(list_transform(generate_series(0, i),
+                                      j -> CAST(48271 AS BIGINT)),
+                       (p, q) -> p * q % 2147483647)) AS a
+),
 sig AS (
   SELECT id,
          list_transform(generate_series(0, 15), i ->
            list_min(list_transform(hashes, x ->
-             (((2*i + 1) * 104729 % 2147483647) * x
+             (a[i + 1] * x
               + (7919*i + 13) % 2147483647) % 2147483647))) AS sig
-  FROM h
+  FROM h, coef
 ),
 bands AS (
   SELECT id,

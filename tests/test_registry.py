@@ -49,83 +49,3 @@ def test_entry_contract_importable():
     assert set(oracles) <= set(qs)
     assert len(qs) == len(all_queries())
 
-
-def test_verification_bookkeeping_invariants():
-    """The changed-keys list is hand-maintained; these are the
-    invariants a hand edit can silently break: no duplicates, no stale
-    names, changed keys lead the iteration order, and the rest is
-    non-decreasing in last-verified round (oldest first)."""
-    from document_vector_indexer_spark.queries.registry import (
-        _CHANGED_SINCE_VERIFIED,
-        _last_verified_rounds,
-    )
-
-    specs = all_queries()
-    assert len(_CHANGED_SINCE_VERIFIED) == len(set(_CHANGED_SINCE_VERIFIED))
-    stale = set(_CHANGED_SINCE_VERIFIED) - set(specs)
-    assert not stale, f"bookkeeping names not in registry: {sorted(stale)}"
-    keys = list(specs)
-    n_changed = len([k for k in _CHANGED_SINCE_VERIFIED if k in specs])
-    assert keys[:n_changed] == [
-        k for k in _CHANGED_SINCE_VERIFIED if k in specs
-    ], "changed-since-verified keys must lead the iteration order"
-    last = _last_verified_rounds()
-    ages = [last.get(k, 0) for k in keys[n_changed:]]
-    assert ages == sorted(ages), (
-        "iteration order after the changed block must be oldest-"
-        "verified-first"
-    )
-
-
-def test_rotation_staleness_bound():
-    """The EXPLICIT rotation guarantee (round-4 VERDICT item 6): with
-    the driver checking the first B=50 keys per round, oldest-first
-    ordering re-checks every key within ceil(N/B) rounds. Simulated
-    forward from the real current state — if someone registers keys
-    past the point where ceil(N/B) grows, or breaks the ordering, this
-    fails."""
-    import math
-
-    from document_vector_indexer_spark.queries.registry import (
-        _last_verified_rounds,
-        _priority_order,
-    )
-
-    keys = list(all_queries())
-    last = dict(_last_verified_rounds())
-    budget = 50
-    horizon = math.ceil(len(keys) / budget)
-    assert horizon <= 4, (
-        f"{len(keys)} keys / {budget} per round = every key only every "
-        f"{horizon} rounds; VERDICT-accepted bound is 4 — trim keys or "
-        "raise the documented bound deliberately"
-    )
-    now = max(last.values(), default=0)
-    checked_at = dict(last)
-    for rnd in range(now + 1, now + 1 + horizon):
-        # changed-list empties after one round by protocol; simulate
-        # with age-only ordering, which is the steady state
-        for k in _priority_order(keys, [], last)[:budget]:
-            last[k] = rnd
-            checked_at[k] = rnd
-    assert all(checked_at.get(k, 0) > now for k in keys), (
-        f"keys not re-checked within {horizon} simulated rounds: "
-        f"{[k for k in keys if checked_at.get(k, 0) <= now][:10]}"
-    )
-
-
-def test_priority_order_fresh_clone_fallback():
-    """With no CORRECTNESS files (fresh clone), every key counts as
-    never-verified and the order degrades to plain registration order
-    (after the changed block)."""
-    from document_vector_indexer_spark.queries.registry import _priority_order
-
-    keys = ["a", "b", "c", "d"]
-    assert _priority_order(keys, [], {}) == keys
-    assert _priority_order(keys, ["c"], {}) == ["c", "a", "b", "d"]
-    # ages shuffle the rest, oldest first, registration tiebreak
-    assert _priority_order(keys, [], {"a": 3, "b": 1, "c": 2}) == [
-        "d", "b", "c", "a"
-    ]
-    # changed keys lead regardless of their age
-    assert _priority_order(keys, ["a"], {"a": 3, "b": 1}) == ["a", "c", "d", "b"]

@@ -155,15 +155,11 @@ def test_contamination_finds_planted_overlap(spark):
 
 
 def test_contamination_duplicate_ids_keep_per_row_grams(spark):
-    """Round-5 ADVICE: the gram window must never merge two rows that
-    share an id — duplicate ids used to interleave tokens at equal
-    positions and emit grams belonging to NEITHER row. Grams are
+    """Two rows that share an id must never mix tokens (an interleaving
+    like "beta epsilon gamma" belongs to NEITHER row). Grams are
     per-row; duplicate-id rows contribute the union of their own
     grams."""
-    from document_vector_indexer_spark.operators.trainprep import (
-        _exploded_grams,
-        contamination_hits,
-    )
+    from document_vector_indexer_spark.operators.trainprep import contamination_hits
 
     dup = _docs(
         spark,
@@ -172,17 +168,14 @@ def test_contamination_duplicate_ids_keep_per_row_grams(spark):
             (1, "delta epsilon zeta"),
         ],
     )
-    grams = {r.gram for r in _exploded_grams(dup, "text", "doc_id", 3).collect()}
-    # ONLY each row's own trigram — never a cross-row interleaving like
-    # "beta epsilon gamma" (the verified pre-fix corruption)
-    assert grams == {"alpha beta gamma", "delta epsilon zeta"}
-
     bench = _docs(spark, [(100, "delta epsilon zeta")])
     got = {
         r.doc_id: (r.n_contaminated, r.n_grams)
         for r in contamination_hits(dup, bench, n=3).collect()
     }
     assert got == {1: (1, 2)}
+    crossed = _docs(spark, [(100, "beta epsilon gamma"), (101, "alpha delta beta")])
+    assert contamination_hits(dup, crossed, n=3).count() == 0
 
 
 def test_contamination_short_docs_have_no_grams(spark):
@@ -193,17 +186,31 @@ def test_contamination_short_docs_have_no_grams(spark):
     assert contamination_hits(train, bench, n=5).count() == 0
 
 
-def test_contamination_hash_impl_matches_string_impl(spark):
-    """r13: the default gram representation is the kernel-computed
-    int64 char-fold hash on both sides (no gram string ever built —
-    the r12 substrings fix applied to q_decontaminate's measured sf100
-    wall). Hash identity == string identity wherever the vocabulary is
-    collision-free under M31, which this fixture is — so the two impls
-    must agree row-for-row on the real corpus split, on planted
-    overlaps, and on duplicate-id inputs (the kernel hashes per ROW,
-    the property the string path needed a synthetic _row key for)."""
-    import pytest
+def _py_contamination(train_rows, bench_rows, n):
+    """Pure-Python oracle under STRING identity: per train id, the
+    distinct word n-gram set, and how many of those grams occur in the
+    bench corpus; only docs with at least one hit."""
+    def grams(text):
+        w = text.split()
+        return {" ".join(w[i : i + n]) for i in range(len(w) - n + 1)}
 
+    bench = set().union(*(grams(t) for _, t in bench_rows))
+    per_id = {}
+    for doc_id, text in train_rows:
+        per_id.setdefault(doc_id, set()).update(grams(text))
+    return sorted(
+        (doc_id, len(g & bench), len(g))
+        for doc_id, g in per_id.items()
+        if g & bench
+    )
+
+
+def test_contamination_hash_impl_matches_string_impl(spark):
+    """Gram identity is M31 char-fold hash identity, which equals
+    string identity wherever the vocabulary is collision-free under
+    M31 — as the fixture is — so the hash-keyed operator must agree
+    row-for-row with a pure-Python distinct-gram-STRING-set oracle on
+    the real corpus split."""
     from document_vector_indexer_spark.operators.trainprep import (
         contamination_hits,
         hash_split,
@@ -213,54 +220,39 @@ def test_contamination_hash_impl_matches_string_impl(spark):
     assigned = hash_split(docs, id_col="doc_id", salt="split")
     train = assigned.filter(F.col("split") == "train")
     test = assigned.filter(F.col("split") == "test")
+    train_rows = [(r.doc_id, r.text) for r in train.select("doc_id", "text").collect()]
+    test_rows = [(r.doc_id, r.text) for r in test.select("doc_id", "text").collect()]
     for n in (5, 2):
-        h = sorted(
-            map(tuple, contamination_hits(train, test, n=n, impl="hash").collect())
-        )
-        s = sorted(
-            map(tuple, contamination_hits(train, test, n=n, impl="string").collect())
-        )
-        assert h == s and len(h) > 0, n
-
-    dup = _docs(spark, [(1, "alpha beta gamma"), (1, "delta epsilon zeta")])
-    bench = _docs(spark, [(100, "delta epsilon zeta")])
-    got = {
-        r.doc_id: (r.n_contaminated, r.n_grams)
-        for r in contamination_hits(dup, bench, n=3, impl="hash").collect()
-    }
-    assert got == {1: (1, 2)}
-    with pytest.raises(ValueError, match="impl"):
-        contamination_hits(train, test, impl="nope")
+        got = sorted(map(tuple, contamination_hits(train, test, n=n).collect()))
+        assert got == _py_contamination(train_rows, test_rows, n) and got, n
 
 
 def test_contamination_hash_semantics_under_planted_collision(spark):
-    """The hash impl's DECLARED semantics (same trade as
-    dup_substring_stats): gram identity is M31 char-fold identity, so
-    a fold collision counts as contamination where string identity
-    would not. Pin it with a CONSTRUCTED collision — the fold of a
-    single char c is just ord(c), so the one-char word
-    chr(fold("ab")) = chr(12805) collides with the 1-gram "ab" — and
-    assert the two impls diverge exactly there and nowhere else. This
-    is documentation-as-test: if the representation ever silently
-    changes (different base/modulus, salted hash), this breaks first.
+    """The DECLARED semantics (same trade as dup_substring_stats): gram
+    identity is M31 char-fold identity, so a fold collision counts as
+    contamination where string identity would not. Pin it with a
+    CONSTRUCTED collision — the fold of a single char c is just ord(c),
+    so the one-char word chr(fold("ab")) = chr(12805) collides with the
+    1-gram "ab". This is documentation-as-test: if the representation
+    ever silently changes (different base/modulus, salted hash), this
+    breaks first.
     """
     from document_vector_indexer_spark.operators.trainprep import (
         contamination_hits,
     )
 
     collider = chr((ord("a") * 131 + ord("b")) % 2147483647)
-    train = _docs(spark, [(1, "ab"), (2, "unrelated")])
-    bench = _docs(spark, [(100, collider)])
-    by_hash = {
+    train_rows = [(1, "ab"), (2, "unrelated")]
+    bench_rows = [(100, collider)]
+    got = {
         r.doc_id: (r.n_contaminated, r.n_grams)
-        for r in contamination_hits(train, bench, n=1, impl="hash").collect()
+        for r in contamination_hits(
+            _docs(spark, train_rows), _docs(spark, bench_rows), n=1
+        ).collect()
     }
-    by_string = {
-        r.doc_id: (r.n_contaminated, r.n_grams)
-        for r in contamination_hits(train, bench, n=1, impl="string").collect()
-    }
-    assert by_hash == {1: (1, 1)}   # collision flags doc 1 under hash identity
-    assert by_string == {}          # string identity sees no overlap
+    assert got == {1: (1, 1)}   # collision flags doc 1 under hash identity
+    # string identity sees no overlap
+    assert _py_contamination(train_rows, bench_rows, 1) == []
 
 
 def test_word_ngrams_edge_sizes(spark):

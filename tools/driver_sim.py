@@ -20,18 +20,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
-
-spark = (
-    SparkSession.builder.master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "America/New_York")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-)
-spark.sparkContext.setLogLevel("ERROR")
-
 import duckdb  # noqa: E402
+from pyspark.sql import SparkSession  # noqa: E402
 
 import __spark_entry__ as E  # noqa: E402
 from tests.parity_util import TABLES, compare  # noqa: E402
@@ -49,6 +39,14 @@ def duckdb_conn_glob(sf_dir: str) -> "duckdb.DuckDBPyConnection":
 
 
 def main() -> int:
+    spark = (
+        SparkSession.builder.master("local[8]")
+        .config("spark.sql.shuffle.partitions", "8")
+        .config("spark.sql.session.timeZone", "America/New_York")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
     sf_dir = os.environ.get("SIM_SF_DIR", "/root/testdata/sf0.01")
     qs, oracles = E.queries(), E.oracle_sql()
     keys = sys.argv[1:] or list(qs)
