@@ -31,8 +31,10 @@ The fitted embedding model is persisted under <output>/_idf_model so
 from __future__ import annotations
 
 import argparse
+import contextlib
 import os
 import sys
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,31 +55,44 @@ def _ensure_doc_id(df: DataFrame, order_cols: list[str]) -> DataFrame:
     return out.drop("_tie").withColumn("doc_id", F.col("doc_id").cast("long"))
 
 
-def _load_input(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet documents table, or a directory of raw documents."""
+@contextlib.contextmanager
+def _load_input(spark: SparkSession, path: str) -> Iterator[DataFrame]:
+    """Parquet documents table, or a directory of raw documents, as
+    ``(filename, text, ...)`` for the duration of the ``with`` block.
+
+    Raw documents are extracted once per command: the extracted
+    projection is persisted (memory and disk, so blocks spill rather
+    than fail) and every later job reads the cache instead of re-running
+    the PDF/DOCX kernels. Extracted text is far smaller than the file
+    bytes, and a lost block recomputes from the deterministic
+    extraction. The cache is released when the block exits. A parquet
+    table is cheap to re-scan and is not cached."""
     if path.endswith(".parquet") or os.path.isfile(os.path.join(path, "_SUCCESS")):
         df = spark.read.parquet(path)
         if "doc_id" not in df.columns:
             df = _ensure_doc_id(df, [df.columns[0]])
-        return df.withColumn("filename", F.concat(F.lit("doc_"), F.col("doc_id")))
+        yield df.withColumn("filename", F.concat(F.lit("doc_"), F.col("doc_id")))
+        return
     from document_vector_indexer_spark.sources.binary_docs import read_documents
 
-    raw = read_documents(spark, path)
-    # Diagnostics in ONE bounded pass (round-4 VERDICT item 4): cache
-    # the (small, error-rows-only) bad projection so count() runs the
-    # extraction over it exactly once and limit(10) reads the cache;
-    # the old collect()[:10] shipped EVERY failed row to the driver
-    # (OOM at a million-corrupt-file scale) and re-ran extraction.
-    bad = raw.filter(~F.col("ok")).select("filename", "extract_error").persist()
+    extracted = (
+        read_documents(spark, path)
+        .select("filename", "text", "extract_error", "ok")
+        .persist()
+    )
     try:
+        # This count is the job that fills the cache; the sample reads
+        # it. Only 10 failed rows ever reach the driver, however many
+        # files failed.
+        bad = extracted.filter(~F.col("ok"))
         n_bad = bad.count()
         if n_bad:
             print(f"warning: {n_bad} file(s) failed extraction:", file=sys.stderr)
             for r in bad.limit(10).collect():
                 print(f"  {r.filename}: {r.extract_error}", file=sys.stderr)
+        yield extracted.filter(F.col("ok")).select("filename", "text")
     finally:
-        bad.unpersist()
-    return raw.filter(F.col("ok")).select("filename", "text")
+        extracted.unpersist()
 
 
 def cmd_index(args: argparse.Namespace) -> None:
@@ -95,7 +110,6 @@ def cmd_index(args: argparse.Namespace) -> None:
     if not os.path.exists(args.input):
         sys.exit(f"error: input not found: {args.input}")
     spark = get_spark(app_name="dvi-index")
-    docs = _load_input(spark, args.input)
 
     model_path = os.path.join(args.output, "_idf_model")
     # NB: the dynamic-partition-overwrite committer writes no root
@@ -108,11 +122,9 @@ def cmd_index(args: argparse.Namespace) -> None:
             e.startswith("split_strategy=") for e in os.listdir(args.output)
         )
     )
-    id_offset = 0
     if incremental:
-        # Cheap local preconditions FIRST — before any Spark job runs
-        # (round-4 review: the old order spent two cluster scans to
-        # print an error that was knowable from the driver).
+        # Cheap local preconditions first, before any Spark job runs:
+        # an error knowable from the driver must not cost a scan.
         #
         # 1. Identity stability: the anti join keys on `filename`. For
         #    a parquet input WITHOUT a doc_id column, _load_input
@@ -147,65 +159,77 @@ def cmd_index(args: argparse.Namespace) -> None:
                 "--incremental --embedder api would append vectors from "
                 "a different embedding space"
             )
-        # converge-don't-recompute: skip documents already in the chunk
-        # table (anti join on filename — one distinct column, broadcast
-        # or shuffle as Catalyst sizes it), continue ids after the
-        # existing max, and APPEND only the new chunks.
-        existing = spark.read.parquet(args.output)
-        seen = existing.select("filename").distinct()
-        docs = docs.join(seen, "filename", "left_anti")
-        if docs.isEmpty():
-            print(f"No new documents. Index at {args.output} is up to date.")
-            return
-        id_offset = existing.agg(F.max("id")).first()[0] or 0
 
-    cleaned = docs.withColumn("text", TX.clean_text("text")).filter(
-        F.length("text") > 0
-    )
-    chunks = chunk_documents(
-        cleaned,
-        strategy=args.strategy,
-        chunk_size=args.chunk_size,
-        overlap=args.overlap,
-        text_col="text",
-        id_cols=("filename",),
-    )
-    # id BEFORE embedding: global_id's boundary-sampling job executes
-    # the chunk lineage once, and must never pay for the embedder
-    # (mapInPandas is not column-prunable)
-    chunks = global_id(
-        chunks, ["filename", "split_strategy", "chunk_pos"], "id"
-    ).withColumn("id", (F.col("id") + F.lit(id_offset)).cast("long"))
-    if args.embedder in ("local", "word2vec"):
+    with _load_input(spark, args.input) as docs:
+        id_offset = 0
         if incremental:
-            from pyspark.ml import PipelineModel
+            # converge-don't-recompute: skip documents already in the
+            # chunk table (anti join on filename — one distinct column,
+            # broadcast or shuffle as Catalyst sizes it), continue ids
+            # after the existing max, and APPEND only the new chunks.
+            existing = spark.read.parquet(args.output)
+            seen = existing.select("filename").distinct()
+            docs = docs.join(seen, "filename", "left_anti")
+            if docs.isEmpty():
+                print(f"No new documents. Index at {args.output} is up to date.")
+                return
+            id_offset = existing.agg(F.max("id")).first()[0] or 0
 
-            model = PipelineModel.load(model_path)
+        cleaned = docs.withColumn("text", TX.clean_text("text")).filter(
+            F.length("text") > 0
+        )
+        chunks = chunk_documents(
+            cleaned,
+            strategy=args.strategy,
+            chunk_size=args.chunk_size,
+            overlap=args.overlap,
+            text_col="text",
+            id_cols=("filename",),
+        )
+        # Fit before ids: the fit reads no id, so its jobs never pay
+        # for global_id's sample and shuffle. The same rows go in; the
+        # IDF fit ignores their order, Word2Vec's seeded SGD sees them
+        # in extraction order instead of id order.
+        model = None
+        if args.embedder in ("local", "word2vec"):
+            if incremental:
+                from pyspark.ml import PipelineModel
+
+                model = PipelineModel.load(model_path)
+            else:
+                from document_vector_indexer_spark.operators.embedding import (
+                    fit_word2vec_embedder,
+                )
+
+                fit = (
+                    fit_local_embedder
+                    if args.embedder == "local"
+                    else fit_word2vec_embedder
+                )
+                model = fit(chunks, text_col="chunk_text", dim=args.embedding_dim)
+                model.write().overwrite().save(model_path)
+        # ids before embedding: global_id's boundary-sampling job runs
+        # the chunk lineage and must never pay for the embedder
+        # (mapInPandas is not column-prunable)
+        chunks = global_id(
+            chunks, ["filename", "split_strategy", "chunk_pos"], "id"
+        ).withColumn("id", (F.col("id") + F.lit(id_offset)).cast("long"))
+        if model is not None:
+            embedded = embed_with_model(model, chunks)
         else:
-            from document_vector_indexer_spark.operators.embedding import (
-                fit_word2vec_embedder,
+            embedded = embed_api_map_in_pandas(
+                chunks, dim=args.embedding_dim, batch_size=args.batch_size
             )
-
-            fit = (
-                fit_local_embedder
-                if args.embedder == "local"
-                else fit_word2vec_embedder
+        out = (
+            embedded.withColumn("created_at", F.current_timestamp())
+            .select(
+                "id", "chunk_text", "embedding", "filename", "split_strategy",
+                "chunk_pos", "created_at",
             )
-            model = fit(chunks, text_col="chunk_text", dim=args.embedding_dim)
-            model.write().overwrite().save(model_path)
-        embedded = embed_with_model(model, chunks)
-    else:
-        embedded = embed_api_map_in_pandas(
-            chunks, dim=args.embedding_dim, batch_size=args.batch_size
         )
-    out = (
-        embedded.withColumn("created_at", F.current_timestamp())
-        .select(
-            "id", "chunk_text", "embedding", "filename", "split_strategy",
-            "chunk_pos", "created_at",
+        write_chunk_table(
+            out, args.output, mode="append" if incremental else "overwrite"
         )
-    )
-    write_chunk_table(out, args.output, mode="append" if incremental else "overwrite")
     n = spark.read.parquet(args.output).count()
     # mirrors the reference's completion message (index_documents.py:308)
     print(
@@ -293,13 +317,16 @@ def cmd_curate(args: argparse.Namespace) -> None:
     """Training-corpus curation pipeline: Gopher quality rules ->
     exact dedup (keep lowest id) -> deterministic hash split, written
     as parquet partitioned by split. Every stage is one of the
-    engine's verified operators. The corpus is scanned twice — once by
-    a single aggregate for the (n_in, n_quality) summary, once by the
-    write — plus, only when the input lacks a doc_id column, the
-    bounded key-sampling pass of the id fallback (global_id pass 0).
-    The dedup/split counts come from the written output, never from
-    extra ``.count()`` passes over the pipeline (round-3 ADVICE: the
-    old per-stage counts re-executed the plan four times)."""
+    engine's verified operators. With ``--dedup exact`` the corpus is
+    scanned once, by the write: the (n_in, n_quality) summary is an
+    ``Observation`` on the rule-labelled docs, filled by that same job,
+    so the Gopher rules run once per doc. When the input lacks a doc_id
+    column, the id fallback adds its bounded key-sampling pass
+    (global_id pass 0). The dedup/split counts come from the written
+    output, never from extra ``.count()`` passes over the pipeline,
+    each of which would re-execute the plan."""
+    from pyspark.sql import Observation
+
     from document_vector_indexer_spark.operators.dedup import exact_dedup_keep_first
     from document_vector_indexer_spark.operators.textanalysis import gopher_rules
     from document_vector_indexer_spark.operators.trainprep import hash_split
@@ -308,30 +335,46 @@ def cmd_curate(args: argparse.Namespace) -> None:
     if not os.path.exists(args.input):
         sys.exit(f"error: input not found: {args.input}")
     spark = get_spark(app_name="dvi-curate")
-    docs = _load_input(spark, args.input)
-    if "doc_id" not in docs.columns:
-        docs = _ensure_doc_id(docs, ["filename"])
-    docs = docs.withColumn("_keep", gopher_rules(F.col("text"))["keep"])
-    stats = docs.agg(
-        F.count("*").alias("n_in"),
-        F.sum(F.col("_keep").cast("long")).alias("n_quality"),
-    ).first()
-    n_in, n_quality = stats["n_in"], stats["n_quality"] or 0
-    kept = docs.filter(F.col("_keep")).drop("_keep")
-    deduped = exact_dedup_keep_first(kept, text_col="text", id_col="doc_id")
-    if args.dedup == "near":
-        # exact pass first (cheap, md5 shuffle), then MinHash + connected
-        # components for the non-identical near-dups
-        from document_vector_indexer_spark.operators.dedup import (
-            near_dedup_keep_first,
+    with _load_input(spark, args.input) as docs:
+        if "doc_id" not in docs.columns:
+            docs = _ensure_doc_id(docs, ["filename"])
+        docs = docs.withColumn("_keep", gopher_rules(F.col("text"))["keep"])
+        summary = (
+            F.count("*").alias("n_in"),
+            F.sum(F.col("_keep").cast("long")).alias("n_quality"),
         )
+        if args.dedup == "exact":
+            # Observed before the quality filter, so the counters see
+            # every input doc. The write is the first job over this
+            # node (or a cache fill of a frame above it, whose metrics
+            # Spark reads through the cache), and it runs every row.
+            obs = Observation()
+            docs = docs.observe(obs, *summary)
+        else:
+            # near-dedup runs eager pair/component jobs before the
+            # write. When a corpus has no near-dup pairs, AQE prunes
+            # the empty branch, observed node included, from the first
+            # of them, and Spark then completes the observation empty.
+            # So this path keeps its own summary aggregate.
+            stats = docs.agg(*summary).first()
+        kept = docs.filter(F.col("_keep")).drop("_keep")
+        deduped = exact_dedup_keep_first(kept, text_col="text", id_col="doc_id")
+        if args.dedup == "near":
+            # exact pass first (cheap, md5 shuffle), then MinHash +
+            # connected components for the non-identical near-dups
+            from document_vector_indexer_spark.operators.dedup import (
+                near_dedup_keep_first,
+            )
 
-        deduped = near_dedup_keep_first(
-            deduped, text_col="text", id_col="doc_id",
-            threshold=args.near_threshold,
-        )
-    split = hash_split(deduped, id_col="doc_id")
-    split.write.mode("overwrite").partitionBy("split").parquet(args.output)
+            deduped = near_dedup_keep_first(
+                deduped, text_col="text", id_col="doc_id",
+                threshold=args.near_threshold,
+            )
+        split = hash_split(deduped, id_col="doc_id")
+        split.write.mode("overwrite").partitionBy("split").parquet(args.output)
+    if args.dedup == "exact":
+        stats = obs.get
+    n_in, n_quality = stats["n_in"], stats["n_quality"] or 0
     per_split = {
         r["split"]: r["n"]
         for r in spark.read.parquet(args.output)
@@ -340,7 +383,6 @@ def cmd_curate(args: argparse.Namespace) -> None:
     n_dedup = sum(per_split.values())
     # the dedup label must say which passes ran — "exact dedup" on a
     # --dedup near run would hide whether near-dedup removed anything
-    # (round-4 review)
     dedup_label = (
         "exact dedup" if args.dedup == "exact" else "exact+near dedup"
     )
@@ -368,55 +410,55 @@ def cmd_analyze(args: argparse.Namespace) -> None:
     if not os.path.exists(args.input):
         sys.exit(f"error: input not found: {args.input}")
     spark = get_spark(app_name="dvi-analyze")
-    docs = _load_input(spark, args.input)
-    base = docs.select(
-        "*",
-        TX.token_count_ws(F.col("text")).alias("_tokens"),
-        F.md5(F.col("text")).alias("_h"),
-    )
-    head = base.agg(
-        F.count("*").alias("n_docs"),
-        F.sum("_tokens").cast("long").alias("total_tokens"),
-        F.sum(F.length("text")).cast("long").alias("total_chars"),
-        F.countDistinct("_h").alias("n_unique_texts"),
-    ).first()
-    report: dict = {
-        "n_docs": head["n_docs"],
-        "total_tokens": head["total_tokens"] or 0,
-        "total_chars": head["total_chars"] or 0,
-        "exact_dup_docs": head["n_docs"] - head["n_unique_texts"],
-    }
-    if "lang" in docs.columns:
-        # NULL lang -> "unknown" BEFORE the groupBy: a None key would
-        # crash json.dumps(sort_keys=True), and remapping after the agg
-        # would silently overwrite a genuine lang='unknown' group
-        report["langs"] = {
-            r["lang"]: r["n"]
-            for r in base.groupBy(
-                F.coalesce("lang", F.lit("unknown")).alias("lang")
-            ).agg(F.count("*").alias("n")).collect()
+    with _load_input(spark, args.input) as docs:
+        base = docs.select(
+            "*",
+            TX.token_count_ws(F.col("text")).alias("_tokens"),
+            F.md5(F.col("text")).alias("_h"),
+        )
+        head = base.agg(
+            F.count("*").alias("n_docs"),
+            F.sum("_tokens").cast("long").alias("total_tokens"),
+            F.sum(F.length("text")).cast("long").alias("total_chars"),
+            F.countDistinct("_h").alias("n_unique_texts"),
+        ).first()
+        report: dict = {
+            "n_docs": head["n_docs"],
+            "total_tokens": head["total_tokens"] or 0,
+            "total_chars": head["total_chars"] or 0,
+            "exact_dup_docs": head["n_docs"] - head["n_unique_texts"],
         }
-    # No source column -> the whole corpus reports as one 'all' group
-    # (a per-filename grouping would be one group per document — not a
-    # batching profile). Plain boolean, not a misleading 'filename'
-    # fallback value (round-4 ADVICE).
-    has_source = "source" in docs.columns
-    grouped = base if has_source else base.withColumn("source", F.lit("all"))
-    report["length_buckets"] = [
-        {
-            "source": r["grp"],
-            "bucket_len": r["bucket_len"],
-            "n_docs": r["n_docs"],
-            "n_batches": r["n_batches"],
-            "util_ppm": r["util_ppm"],
-        }
-        for r in length_buckets(grouped, "_tokens", "source").collect()
-    ]
-    id_col = "doc_id" if "doc_id" in docs.columns else "filename"
-    report["vocab_top10"] = [
-        {"word": r["word"], "n_docs": r["n_docs"], "n_occur": r["n_occur"]}
-        for r in vocab_topk(docs, k=10, text_col="text", id_col=id_col).collect()
-    ]
+        if "lang" in docs.columns:
+            # NULL lang -> "unknown" BEFORE the groupBy: a None key would
+            # crash json.dumps(sort_keys=True), and remapping after the agg
+            # would silently overwrite a genuine lang='unknown' group
+            report["langs"] = {
+                r["lang"]: r["n"]
+                for r in base.groupBy(
+                    F.coalesce("lang", F.lit("unknown")).alias("lang")
+                ).agg(F.count("*").alias("n")).collect()
+            }
+        # No source column -> the whole corpus reports as one 'all' group
+        # (a per-filename grouping would be one group per document — not a
+        # batching profile). Plain boolean, not a misleading 'filename'
+        # fallback value.
+        has_source = "source" in docs.columns
+        grouped = base if has_source else base.withColumn("source", F.lit("all"))
+        report["length_buckets"] = [
+            {
+                "source": r["grp"],
+                "bucket_len": r["bucket_len"],
+                "n_docs": r["n_docs"],
+                "n_batches": r["n_batches"],
+                "util_ppm": r["util_ppm"],
+            }
+            for r in length_buckets(grouped, "_tokens", "source").collect()
+        ]
+        id_col = "doc_id" if "doc_id" in docs.columns else "filename"
+        report["vocab_top10"] = [
+            {"word": r["word"], "n_docs": r["n_docs"], "n_occur": r["n_occur"]}
+            for r in vocab_topk(docs, k=10, text_col="text", id_col=id_col).collect()
+        ]
     print(json.dumps(report, sort_keys=True))
 
 

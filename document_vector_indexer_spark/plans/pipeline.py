@@ -36,7 +36,8 @@ from document_vector_indexer_spark.operators.chunking import chunk_documents
 from document_vector_indexer_spark.operators.embedding import (
     DEFAULT_DIM,
     embed_api_map_in_pandas,
-    embed_local,
+    embed_with_model,
+    fit_local_embedder,
 )
 
 
@@ -65,18 +66,25 @@ def index_documents(
         text_col=text_col,
         id_cols=(filename_col,),
     )
+    if embedder not in ("local", "api"):
+        raise ValueError(f"unknown embedder: {embedder}")
+    # The IDF fit reads no id, so it runs on the pre-id chunks: its
+    # treeAggregate then never pays for global_id's sample and shuffle.
+    model = (
+        fit_local_embedder(chunks, text_col="chunk_text", dim=embedding_dim)
+        if embedder == "local"
+        else None
+    )
     if with_global_id:
         from document_vector_indexer_spark.operators.ranking import global_id
 
         chunks = global_id(
             chunks, [filename_col, "split_strategy", "chunk_pos"], "id"
         ).withColumn("id", F.col("id").cast("long"))
-    if embedder == "local":
-        embedded = embed_local(chunks, text_col="chunk_text", dim=embedding_dim)
-    elif embedder == "api":
-        embedded = embed_api_map_in_pandas(chunks, dim=embedding_dim)
+    if model is not None:
+        embedded = embed_with_model(model, chunks)
     else:
-        raise ValueError(f"unknown embedder: {embedder}")
+        embedded = embed_api_map_in_pandas(chunks, dim=embedding_dim)
 
     out = embedded.withColumn("created_at", F.current_timestamp())
     return out.select(

@@ -371,27 +371,11 @@ def test_cli_index_cdc_strategy(spark, doc_dir, tmp_path, capsys):
     assert len(lines) == 2 and "spark.txt" in lines[0]
 
 
-def test_load_input_bad_diagnostics_single_pass(spark, tmp_path, capsys,
-                                                monkeypatch):
-    """The failed-extraction diagnostic (warning + 10-row sample) must
-    execute extraction over the bad set exactly ONCE and never collect
-    more than 10 rows (round-4 VERDICT item 4: the old collect()[:10]
-    shipped every bad row to the driver and re-ran extraction).
-
-    An accumulator-bumping mapInPandas layer is spliced on top of
-    read_documents: every extracted file bumps it once per pipeline
-    execution, so the accumulator value after _load_input == n_files
-    iff the diagnostic ran one pass (count() fills the persist cache,
-    limit(10) reads it)."""
-    import document_vector_indexer_spark.cli as cli
+def _count_extractions(spark, monkeypatch):
+    """Splice an accumulator-bumping mapInPandas layer on top of
+    read_documents and return the accumulator: every extracted file
+    bumps it once per execution of the extraction lineage."""
     from document_vector_indexer_spark.sources import binary_docs
-
-    d = tmp_path / "mixed"
-    d.mkdir()
-    n_bad = 12  # > the 10-row sample cap
-    for i in range(n_bad):
-        (d / f"bad_{i:02d}.pdf").write_bytes(b"%PDF-garbage")
-    (d / "good.txt").write_text("hello world")
 
     acc = spark.sparkContext.accumulator(0)
     real = binary_docs.read_documents
@@ -407,17 +391,189 @@ def test_load_input_bad_diagnostics_single_pass(spark, tmp_path, capsys,
         return df.mapInPandas(bump, df.schema)
 
     monkeypatch.setattr(binary_docs, "read_documents", counting)
-    good = cli._load_input(spark, str(d))
+    return acc
 
-    n_files = n_bad + 1
-    assert acc.value == n_files, (
-        f"diagnostic ran {acc.value / n_files:.1f} extraction passes; want 1"
+
+def _persistent_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_load_input_bad_diagnostics_single_pass(spark, tmp_path, capsys,
+                                                monkeypatch):
+    """The failed-extraction diagnostic (warning + 10-row sample) must
+    execute extraction exactly ONCE and never collect more than 10
+    rows: a collect() of every failed row would ship a million-corrupt-
+    file corpus to the driver.
+
+    The accumulator after entering _load_input == n_files iff the
+    diagnostic ran one pass (count() fills the persist cache,
+    limit(10) reads it)."""
+    import document_vector_indexer_spark.cli as cli
+
+    d = tmp_path / "mixed"
+    d.mkdir()
+    n_bad = 12  # > the 10-row sample cap
+    for i in range(n_bad):
+        (d / f"bad_{i:02d}.pdf").write_bytes(b"%PDF-garbage")
+    (d / "good.txt").write_text("hello world")
+
+    acc = _count_extractions(spark, monkeypatch)
+    with cli._load_input(spark, str(d)) as good:
+        n_files = n_bad + 1
+        assert acc.value == n_files, (
+            f"diagnostic ran {acc.value / n_files:.1f} extraction passes; want 1"
+        )
+        err = capsys.readouterr().err
+        assert f"warning: {n_bad} file(s) failed extraction:" in err
+        sample = [l for l in err.splitlines() if l.startswith("  bad_")]
+        assert len(sample) == 10  # capped, not all 12
+        assert good.count() == 1  # only good.txt survives
+
+
+def test_cli_index_extracts_each_file_once(spark, doc_dir, tmp_path, capsys,
+                                           monkeypatch):
+    """A whole `cli index` run (diagnostics, id sampling, id shuffle,
+    IDF fit, write) extracts every input file exactly once: later jobs
+    read the persisted extraction, not the files. The same holds for an
+    --incremental run, whose isEmpty probe and anti join also read the
+    cache. The cache is released when the command returns."""
+    import shutil
+
+    d = tmp_path / "mixed_idx"
+    shutil.copytree(doc_dir, d)
+    (d / "bad.pdf").write_bytes(b"%PDF-garbage")
+    (d / "bad.docx").write_bytes(b"not a zip")
+    out = str(tmp_path / "chunks_once")
+    args = ["index", str(d), "--chunk-size", "200", "--overlap", "40",
+            "--embedding-dim", "16", "--output", out]
+
+    cached_before = _persistent_rdd_ids(spark)
+    acc = _count_extractions(spark, monkeypatch)
+    main(args)
+    assert "Done. Indexed" in capsys.readouterr().out
+    assert acc.value == 5, f"{acc.value / 5:.1f} extraction passes; want 1"
+    assert _persistent_rdd_ids(spark) <= cached_before
+
+    (d / "fresh.txt").write_text(
+        "A freshly added document about broadcast hash joins. " * 5
     )
-    err = capsys.readouterr().err
-    assert f"warning: {n_bad} file(s) failed extraction:" in err
-    sample = [l for l in err.splitlines() if l.startswith("  bad_")]
-    assert len(sample) == 10  # capped, not all 12
-    assert good.count() == 1  # only good.txt survives
+    acc.value = 0
+    main([*args, "--incremental"])
+    assert "incremental" in capsys.readouterr().out
+    assert acc.value == 6, f"{acc.value / 6:.1f} extraction passes; want 1"
+    assert _persistent_rdd_ids(spark) <= cached_before
+
+
+def _curate_corpus(spark, tmp_path, near_pairs: bool = True) -> str:
+    """11 docs: 8 distinct good docs, an exact copy of doc 0, one
+    Gopher-failing doc and (with ``near_pairs``) a one-word edit of
+    doc 0 that only near dedup removes."""
+    import random
+
+    rng = random.Random(7)
+    vocab = [f"word{i}" for i in range(400)]
+
+    def doc():
+        return " ".join(
+            f"{rng.choice(vocab)} the {rng.choice(vocab)} of" for _ in range(40)
+        )
+
+    rows = [(i, f"doc_{i}", doc()) for i in range(8)]
+    rows.append((100, "doc_100", rows[0][2]))
+    rows.append((101, "doc_101", "### ### ###"))
+    edit = rows[0][2].split(" ")
+    edit[0] = "changed"
+    rows.append((102, "doc_102", " ".join(edit) if near_pairs else doc()))
+    src = str(tmp_path / f"curate_src_{near_pairs}.parquet")
+    spark.createDataFrame(
+        rows, "doc_id long, filename string, text string"
+    ).write.parquet(src)
+    return src
+
+
+def test_cli_curate_runs_input_lineage_once(spark, tmp_path, capsys,
+                                            monkeypatch):
+    """`cli curate --dedup exact` evaluates its input lineage (and so
+    the Gopher rules) once: the (n_in, n_quality) summary is observed
+    inside the write job, not computed by an aggregate of its own."""
+    import contextlib
+
+    import document_vector_indexer_spark.cli as cli
+
+    src = _curate_corpus(spark, tmp_path)
+    acc = spark.sparkContext.accumulator(0)
+    real = cli._load_input
+
+    def bump(batches):
+        for pdf in batches:
+            acc.add(len(pdf))
+            yield pdf
+
+    @contextlib.contextmanager
+    def counting(spark_, path):
+        with real(spark_, path) as df:
+            yield df.mapInPandas(bump, df.schema)
+
+    monkeypatch.setattr(cli, "_load_input", counting)
+    main(["curate", src, "--output", str(tmp_path / "cur_once")])
+    assert "11 docs -> 10 pass quality" in capsys.readouterr().out
+    assert acc.value == 11, f"input lineage ran {acc.value / 11:.1f} times; want 1"
+
+
+@pytest.mark.parametrize(
+    "case, near_pairs, want",
+    [
+        ("exact", True, "11 docs -> 10 pass quality (1 dropped) -> 9 after exact dedup"),
+        ("near", True, "11 docs -> 10 pass quality (1 dropped) -> 8 after exact+near dedup"),
+        ("near", False, "11 docs -> 10 pass quality (1 dropped) -> 9 after exact+near dedup"),
+        ("persisted", True, "11 docs -> 10 pass quality (1 dropped) -> 9 after exact dedup"),
+    ],
+)
+def test_cli_curate_summary_exact(spark, tmp_path, capsys, monkeypatch,
+                                  case, near_pairs, want):
+    """The summary's n_in and n_quality are exact, and the command
+    returns, whichever job first runs the observed docs: the write
+    (exact), near dedup's eager checkpoints, with and without near-dup
+    pairs, or a cache fill of the quality-filtered docs before the
+    write (the pattern a per-layer tracer uses)."""
+    from document_vector_indexer_spark.operators import dedup
+
+    src = _curate_corpus(spark, tmp_path, near_pairs=near_pairs)
+    cached = []
+    if case == "persisted":
+        real = dedup.exact_dedup_keep_first
+
+        def materialized(df, *a, **kw):
+            df = df.persist()
+            cached.append(df)
+            df.count()
+            return real(df, *a, **kw)
+
+        monkeypatch.setattr(dedup, "exact_dedup_keep_first", materialized)
+    argv = ["curate", src, "--output", str(tmp_path / "cur_sum")]
+    try:
+        main(argv + (["--dedup", "near"] if case == "near" else []))
+    finally:
+        for df in cached:
+            df.unpersist()
+    assert want in capsys.readouterr().out
+
+
+def test_cli_commands_release_their_cache(spark, doc_dir, tmp_path, capsys):
+    """index, curate and analyze over a raw document directory each
+    leave no persisted RDD behind: an in-process caller running many
+    commands must not accumulate cached blocks."""
+    before = _persistent_rdd_ids(spark)
+    main(["index", str(doc_dir), "--embedding-dim", "16",
+          "--output", str(tmp_path / "rel_idx")])
+    assert _persistent_rdd_ids(spark) <= before
+    main(["curate", str(doc_dir), "--output", str(tmp_path / "rel_cur")])
+    assert _persistent_rdd_ids(spark) <= before
+    main(["analyze", str(doc_dir)])
+    assert _persistent_rdd_ids(spark) <= before
+    out = capsys.readouterr().out
+    assert "Done. Indexed" in out and "Curated" in out
+    assert '"n_docs": 3' in out
 
 
 def test_cli_index_then_query_real_pdf_docx(spark, tmp_path, capsys):
